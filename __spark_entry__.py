@@ -403,7 +403,7 @@ def q_dedup_anti_join(spark, sf_dir):
 
 def q_dedup_anti_join_cuckoo(spark, sf_dir):
     """F4/J4 via the cuckoo-filter fast path (operators/cuckoo.py — the
-    north rule's "bloom/cuckoo" alternative AMQ): certainly-new rows
+    engine's seen-set filter): certainly-new rows
     split off map-side by a broadcast fingerprint probe, only the
     ~1.2e-4-rate suspects reach the exact anti-join shuffle. Zero false
     negatives ⇒ the oracle is the plain exact anti-join SQL."""

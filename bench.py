@@ -146,7 +146,6 @@ def build_crawl_state(spark, catalog, cfg, n_frontier=None):
             "round": -1,
             "next_priority": n_frontier,
             "fetched_total": 0,
-            "seen_filter": cfg.seen_filter,
             "frontier_gross": n_frontier,
         },
     )
@@ -191,8 +190,6 @@ def bench_crawl_round(spark, cores: int, use_bloom: bool = True, skew_safe: bool
             max_pages=10**9,
             max_concurrent_per_host=10**9,
             frontier_partitions=fixed_partitions or max(cores, 8),
-            # SPARK_GRAFT_SEEN_FILTER=cuckoo benches the cuckoo AMQ path
-            seen_filter=os.environ.get("SPARK_GRAFT_SEEN_FILTER", "bloom"),
         )
         world = WorldConfig(seed=42, n_hosts=N_HOSTS, error_rate=0.02)
 
@@ -224,7 +221,6 @@ def bench_crawl_round(spark, cores: int, use_bloom: bool = True, skew_safe: bool
             "urls_per_sec_per_core": round(n_frontier / wall / cores, 1),
             "cores": cores,
             "skew_safe": skew_safe,
-            "seen_filter": cfg.seen_filter,
             # per-stage decomposition (same labels as CRAWLERIA_PROFILE)
             "stage_walls": st.get("stage_walls", {}),
         }
@@ -273,7 +269,6 @@ def bench_crawl_multiround(
             max_pages=10**9,
             max_concurrent_per_host=max(1, math.ceil(hub_live / rounds)),
             frontier_partitions=fixed_partitions or max(cores, 8),
-            seen_filter=os.environ.get("SPARK_GRAFT_SEEN_FILTER", "bloom"),
         )
         world = WorldConfig(seed=42, n_hosts=N_HOSTS, error_rate=0.02)
 
@@ -438,8 +433,6 @@ AB_VARIANTS = {
     # one knob per battery; everything else identical, runs interleaved
     "skew": {"skew_safe": {"SPARK_GRAFT_SKEW_SAFE": "1"},
              "plain_rank": {"SPARK_GRAFT_SKEW_SAFE": "0"}},
-    "filter": {"bloom": {"SPARK_GRAFT_SEEN_FILTER": "bloom"},
-               "cuckoo": {"SPARK_GRAFT_SEEN_FILTER": "cuckoo"}},
     "pipeline": {"pipelined": {"SPARK_GRAFT_PIPELINE": "1",
                                "SPARK_GRAFT_SCALE_ROUNDS": "4"},
                  "blocking": {"SPARK_GRAFT_PIPELINE": "0",

@@ -39,17 +39,23 @@ def capture_plan(df, path: str) -> None:
         f.write(txt)
 
 
-def main() -> None:
-    import bench
-    import __spark_entry__ as entry
-    from crawleria_spark.session import get_spark
+USAGE = "usage: python bench_extra.py [--plans TAG] (--all | QUERY ...)"
 
+
+def main() -> None:
     args = [a for a in sys.argv[1:]]
     plan_tag = None
     if "--plans" in args:
         i = args.index("--plans")
+        if i + 1 >= len(args) or args[i + 1].startswith("--"):
+            sys.exit(f"--plans needs a TAG\n{USAGE}")
         plan_tag = args[i + 1]
         del args[i : i + 2]
+
+    import bench
+    import __spark_entry__ as entry
+    from crawleria_spark.session import get_spark
+
     if "--all" in args:
         names = list(bench.HEADLINE)
     else:

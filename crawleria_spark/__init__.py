@@ -7,8 +7,8 @@ Subpackages
 functions   vectorized column functions (URL canonicalization, hashing,
             text quality/lang-id/tokenization, similarity primitives)
 operators   relational/crawl operators (politeness windows, top-k,
-            dedup families, ANN, global dense ordinals, bloom/cuckoo
-            seen-set — cuckoo adds O(filter) deletion for re-crawl)
+            dedup families, ANN, global dense ordinals, cuckoo-filter
+            seen-set with O(filter) deletion for re-crawl)
 sources     fetch stage (mapInPandas, injectable fetcher) + span extraction
 plans       snapshot catalog (atomic round commits) + the CrawlEngine loop
 oracle      pure-Python reference-semantics oracle crawler (test anchor)

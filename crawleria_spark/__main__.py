@@ -35,21 +35,11 @@ def _engine(args, spark):
         with open(args.cookies_file) as f:
             cookies = tuple(sorted(json.load(f).items()))
     catalog = SnapshotCatalog(spark, args.catalog)
-    kind = getattr(args, "seen_filter", None)
-    if kind is None:
-        # the AMQ kind is CATALOG state (persisted in manifest meta at
-        # init) — default to it so forget/refresh/resumed crawls against
-        # a cuckoo catalog never silently fall back to bloom bookkeeping
-        meta = catalog.latest_meta()
-        kind = meta.get("seen_filter") or (
-            "cuckoo" if catalog.exists("seen_cuckoo") else "bloom"
-        )
     cfg = CrawlConfig(
         max_depth=args.depth,
         max_pages=args.max_pages,
         allowed_domains=tuple(args.allowed_domains or ()),
         cookies=cookies,
-        seen_filter=kind,
     )
     if getattr(args, "fetcher", "synthetic") == "http":
         from crawleria_spark.sources.http import http_fetcher
@@ -94,8 +84,8 @@ def cmd_crawl(args, spark) -> dict:
 def cmd_forget(args, spark) -> dict:
     """Un-see URLs for re-crawl/refresh (CrawlEngine.forget): removes
     them from the exact seen table, deletes their fingerprints from the
-    cuckoo filter (or rebuilds the bloom), and by default re-enqueues
-    them so the next `crawl --resume` re-fetches."""
+    cuckoo seen filter, and by default re-enqueues them so the next
+    `crawl --resume` re-fetches."""
     engine, catalog = _engine(args, spark)
     n = engine.forget(args.urls, requeue=not args.no_requeue)
     return {
@@ -228,28 +218,18 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--timeout", type=float, default=10.0)
     c.add_argument("--proxy-to", help="route requests to host:port, keeping "
                    "the URL host in the Host header (fetch proxy / tests)")
-    c.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                   help="AMQ seen-set kind; cuckoo enables O(filter) forget. "
-                   "Default: the catalog's persisted kind (bloom for a "
-                   "fresh catalog). NOTE: forget-heavy deployments want "
-                   "cuckoo — under bloom every forget is an O(seen) "
-                   "filter rebuild because blooms cannot delete")
 
     fg = sub.add_parser("forget", help="un-see URLs so a resumed crawl "
                         "re-fetches them (re-crawl/refresh)")
     fg.add_argument("urls", nargs="+")
     fg.add_argument("--no-requeue", action="store_true",
                     help="only un-see; re-fetch happens on re-discovery")
-    fg.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                    help="default: the catalog's persisted kind")
     fg.set_defaults(depth=3, max_pages=50, allowed_domains=None)
 
     rf = sub.add_parser("refresh", help="TTL re-crawl: un-see + re-enqueue "
                         "pages first fetched more than N rounds ago")
     rf.add_argument("--max-age-rounds", type=int, required=True)
     rf.add_argument("--no-requeue", action="store_true")
-    rf.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                    help="default: the catalog's persisted kind")
     rf.set_defaults(depth=3, max_pages=50, allowed_domains=None)
 
     pr = sub.add_parser("process")

@@ -58,21 +58,11 @@ class CrawlConfig:
     # logically-dequeued rows, bounding the dead fraction the per-round
     # dedup scan carries)
     compact_dirs_threshold: int = 64
-    # AMQ seen-filter kind (north rule: "bloom/cuckoo-filter URL-seen
-    # set"). "bloom" = operators/bloom.py (default; ~1.2 bytes/key at
-    # fpp 0.01, no deletion); "cuckoo" = operators/cuckoo.py (~2.4
-    # bytes/key capacity, probe fpp ≈ 1.2e-4, supports DELETION —
-    # required by CrawlEngine.forget's O(filter) re-crawl path).
-    # Active only when the engine is built with use_bloom=True.
-    # Measured (BENCH/BASELINE.md round-4 filter A/B + kernel profile,
-    # 2M URLs): the two kinds are throughput-equivalent — the probe is
-    # ~1 s/2M keys on one core, invisible in a round. Pick cuckoo when
-    # the deployment uses forget/refresh (O(filter) deletion); bloom
-    # otherwise (half the state bytes/key). The kind persists in
-    # catalog meta at init, so decide it once per catalog.
-    seen_filter: str = "bloom"
-    bloom_fpp: float = 0.01
-    bloom_capacity_per_partition: int = 1_000_000
+    # per-bucket capacity of the cuckoo seen filter (operators/cuckoo.py;
+    # active when the engine is built with use_bloom=True). Fixes the
+    # crawl-constant slot-table size m: rows stay sparse (6 B/entry)
+    # below one-third fill, then store the dense 8·m-byte table.
+    filter_capacity_per_partition: int = 1_000_000
     # fetch-rebalance salt granularity: a hot host's kept rows split
     # into this many shuffle keys. Needs >= ~2x frontier_partitions so
     # hash collisions can't re-clump a 30%-hub's salt classes (measured

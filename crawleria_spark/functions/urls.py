@@ -220,7 +220,7 @@ def url_hash_col(url_canon: Column | str) -> Column:
 
     JVM-side ``xxhash64`` (whole-stage-codegen'd) — no Python boundary.
     The exact dedup join is on ``url_canon`` itself, so the hash only
-    feeds the bloom fast path and partitioning; collisions are harmless.
+    feeds the cuckoo seen-set filter and partitioning; collisions are harmless.
     """
     col = F.col(url_canon) if isinstance(url_canon, str) else url_canon
     return F.xxhash64(col)

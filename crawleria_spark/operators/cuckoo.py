@@ -1,24 +1,35 @@
-"""Partitioned cuckoo-filter URL-seen set (north-rule F4/J4 alternative).
+"""Partitioned cuckoo-filter URL-seen set (north-rule F4/J4 fast path).
 
-The north rule names a "bloom/cuckoo-filter URL-seen set"; bloom.py is
-the default implementation. This module is the cuckoo alternative with
-the SAME delta-append architecture and anti-join contract (zero false
-negatives ⇒ identical dedup results), plus the capability a bloom
-fundamentally lacks: DELETION. ``CrawlEngine.forget`` uses it to un-see
-URLs for re-crawl/refresh scheduling by editing O(filter-bytes) of
-fingerprints instead of re-hashing the entire seen set the way the
-bloom path must.
+The exact dedup is a ``left_anti`` join of the frontier against the
+``seen`` table on ``url_canon`` — correct but it shuffles every pending
+URL every round. At 10^10 URLs the overwhelming majority of re-discovered
+links are already seen; an approximate-membership filter answers
+"definitely NOT seen" map-side, so the exact join only carries the
+filter-positive suspects:
+
+    alive = negative(pending)                  # certainly new
+          ∪ (positive(pending) ⟕̸ seen)        # exact confirm
+
+Zero false negatives ⇒ the result is IDENTICAL to the plain anti-join;
+false positives only cost a slightly larger confirm join. Unlike a
+bloom filter, a cuckoo filter can DELETE: ``CrawlEngine.forget`` uses
+it to un-see URLs for re-crawl/refresh scheduling by editing
+O(filter-bytes) of fingerprints instead of re-hashing the entire seen
+set.
 
 Design — partial-key cuckoo hashing (Fan, Andersen, Kaminsky,
 Mitzenmacher: "Cuckoo Filter: Practically Better Than Bloom",
 CoNEXT 2014; public):
 
 - per hash-bucket ``pmod(url_hash, n_buckets)`` one filter row
-  ``(partition int, cuckoo binary, n_items long)`` — the same table
-  shape as the bloom path, so the snapshot catalog treats both alike;
+  ``(partition int, cuckoo binary, n_items long)`` per round delta
+  (FIXTURES.md §4); ``cuckoo_split`` merges the accumulated delta rows
+  per bucket EXECUTOR-side at probe time, so the driver collect is
+  bounded by n_buckets merged rows no matter how many rounds have
+  appended. Long crawls compact the table with ``compact_cuckoo``;
 - each filter is a table of ``m`` buckets × 4 slots of 16-bit
-  fingerprints. ``fp = high 16 bits of xxhash64`` (0 remapped to 1 so 0
-  can mean "empty slot"), ``i1 = h mod m``,
+  fingerprints. ``fp = high 16 bits of mix(xxhash64)`` (0 remapped to 1
+  so 0 can mean "empty slot"), ``i1 = mix(h) mod m``,
   ``i2 = i1 XOR (fp * 0x5bd1e995 mod m)`` — the XOR form makes either
   bucket recoverable from the other plus the fingerprint, which is what
   makes eviction, same-``m`` merging, and deletion possible without the
@@ -27,17 +38,15 @@ CoNEXT 2014; public):
   0.84 load then rounded up to a power of two), so every per-round
   delta row of one crawl is mergeable with every other. Delta rows are
   serialized SPARSELY (sorted slot positions + fingerprints, 6
-  bytes/entry) until one-third full, so a small round still appends
-  O(delta) bytes exactly like the delta-sized blooms — the fixed ``m``
-  costs nothing on disk;
+  bytes/entry) until one-third full, so a small round appends O(delta)
+  bytes — the fixed ``m`` costs nothing on disk until then; beyond
+  one-third fill a row stores the dense 8·m-byte slot table;
 - insertion that still fails after 256 evictions lands in an overflow
   STASH of (bucket, fp) pairs carried in the blob. The stash is what
   guarantees ZERO false negatives under any load — correctness never
   depends on the table having room, only probe cost degrades;
 - probe FP rate ≈ 8/2^16 ≈ 1.2e-4 (8 slot comparisons × 16-bit
-  fingerprints) — ~80× lower than the bloom default fpp=0.01, at ~2.4
-  bytes/key capacity vs the bloom's ~1.2. The suspects side of the
-  anti-join shrinks accordingly.
+  fingerprints) at ~2.4 bytes/key capacity.
 
 All build/probe/merge math is vectorized numpy over Arrow batches (no
 per-row Python in the hot path); the only per-key Python loops are the
@@ -62,12 +71,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawleria_spark.operators.bloom import _mix64
-
 SLOTS = 4
 _MAX_LOAD = 0.84
 _MIX = 0x5BD1E995
 _MAX_KICKS = 256
+
+# Filter-format epoch, stamped into catalog meta ("amq_epoch") whenever a
+# filter table is written. The blobs carry no version header, so a
+# hashing-scheme change is UNDETECTABLE at probe time — a resumed crawl
+# probing old blobs with new slot indexes gets false negatives
+# (already-seen URLs re-fetched, duplicate rows). Bump this on ANY change
+# to the fingerprint/bucket derivation (_decompose, _mix64); the engine
+# rebuilds stale-epoch filters from the exact seen table at read.
+# Epoch history: 1 = unmixed hashing; 2 = splitmix64 _mix64
+# decorrelation of slot indexes from the pmod bucket key.
+FILTER_EPOCH = 2
 
 CUCKOO_SCHEMA = T.StructType(
     [
@@ -93,13 +111,25 @@ def cuckoo_m_buckets(capacity: int) -> int:
     return m
 
 
+def _mix64(h: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer: decorrelate slot indexes from the
+    pmod(hash, n_buckets) partition assignment. Within one partition
+    every key satisfies h ≡ b (mod n_buckets), so the raw hash's low
+    bits are constant there and ``h & (m-1)`` would concentrate every
+    i1 into 1/n_buckets of the table (more evictions, a larger stash,
+    a higher probe FP rate). Full-avalanche mixing restores uniformity
+    regardless of how the rows were bucketed."""
+    with np.errstate(over="ignore"):
+        z = h.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
+        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+        return z ^ (z >> np.uint64(31))
+
+
 def _decompose(h: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(fp uint16, i1 int64, i2 int64) for int64 hashes; m power of two.
 
-    Hashes are splitmix64-mixed first (bloom._mix64): the raw hash is
-    also the pmod bucket key, so its low bits are constant within a
-    partition and ``h & (m-1)`` would concentrate every i1 into
-    1/n_buckets of the table, inflating evictions and stash size."""
+    Hashes are splitmix64-mixed first (see _mix64)."""
     hu = _mix64(np.ascontiguousarray(h, dtype=np.int64))
     fp = ((hu >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
     fp = np.where(fp == 0, np.uint16(1), fp)
@@ -301,8 +331,8 @@ def build_cuckoo(
 ) -> DataFrame:
     """Per-bucket cuckoo filters over a hash column — delta-append rows.
 
-    Hashes are deduplicated (set semantics, like the bloom); m is fixed
-    by `capacity_per_bucket` so all rows of one crawl merge losslessly,
+    Hashes are deduplicated (set semantics); m is fixed by
+    `capacity_per_bucket` so all rows of one crawl merge losslessly,
     while sparse encoding keeps a small round's append O(delta) bytes."""
     m = cuckoo_m_buckets(capacity_per_bucket)
 
@@ -329,8 +359,8 @@ def build_cuckoo(
 
 def compact_cuckoo(df: DataFrame) -> DataFrame:
     """Merge accumulated delta rows into one row per partition —
-    executor-side (applyInPandas), like compact_blooms. Also the step
-    that makes deletion safe (single-row occurrence semantics)."""
+    executor-side (applyInPandas). Also the step that makes deletion
+    safe (single-row occurrence semantics)."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
@@ -353,9 +383,9 @@ def cuckoo_split(
 ) -> tuple[DataFrame, DataFrame]:
     """(certainly-new rows, filter-positive suspects).
 
-    Mirrors bloom_split: delta rows are merged EXECUTOR-side first, so
-    the driver collects exactly one O(min(6·entries, 8·m))-byte row per
-    partition independent of accumulated round count, then the merged
+    Delta rows are merged EXECUTOR-side first, so the driver collects
+    exactly one O(min(6·entries, 8·m))-byte row per partition
+    independent of accumulated round count, then the merged
     filters broadcast to an Arrow-vectorized probe. Stash entries probe
     too ⇒ zero false negatives at any load."""
     blobs = {
@@ -380,9 +410,10 @@ def cuckoo_split(
 
     flagged = pending.withColumn("__maybe_seen", maybe_seen(F.col(hash_col)))
     if registry is not None:
-        # persist only when the caller can unpersist (see bloom_split) —
-        # registry-less invocations (oracle queries, tests) trade a
-        # second probe pass for zero leaked cached plans
+        # probed once, read by both splits — but ONLY when the caller
+        # hands us a registry to unpersist through: registry-less
+        # invocations (oracle queries, tests) trade a second probe pass
+        # for zero leaked cached plans
         flagged = flagged.persist()
         registry.append(flagged)
     certain_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
@@ -395,14 +426,14 @@ def anti_join_seen_cuckoo(
     seen: DataFrame,
     cuckoo_df: DataFrame | None = None,
     n_buckets: int = 32,
-    capacity_per_bucket: int = 1_000_000,
-    fpp: float = 0.0,  # signature-compatible with the bloom path; unused
     registry: list | None = None,
 ) -> DataFrame:
-    """frontier LEFT ANTI JOIN seen with a cuckoo pre-filter.
+    """frontier LEFT ANTI JOIN seen with an optional cuckoo pre-filter.
 
     Identical results to the exact anti-join (zero false negatives);
-    the exact join's shuffle carries only the ~1.2e-4-rate suspects."""
+    with a filter the exact join's shuffle carries only the
+    ~1.2e-4-rate suspects. ``registry`` collects the split's persisted
+    intermediate for caller-side unpersist after the round."""
     if cuckoo_df is None:
         return pending.join(seen.select("url_canon"), "url_canon", "left_anti")
     certain_new, suspects = cuckoo_split(
@@ -415,7 +446,7 @@ def anti_join_seen_cuckoo(
 def delete_hashes(
     cuckoo_df: DataFrame, hashes, n_buckets: int = 32
 ) -> DataFrame:
-    """Remove previously-inserted keys — the operation blooms can't do.
+    """Remove previously-inserted keys (bloom filters cannot do this).
 
     Admin-path op (re-crawl / refresh scheduling): compacts to one row
     per partition (single-row deletion is the classic safe

@@ -662,10 +662,15 @@ def connected_components(
     and on each iteration's ``labels`` truncates the plan to a
     LogicalRDD, so the edge pipeline runs ONCE and each iteration is
     three small shuffles over materialized RDDs (measured: 2.2 s, 137x).
-    It is lazy/construct-safe (no job until the first action) and
-    intermediates live only for this DataFrame's lifetime — nothing is
-    reused across separate invocations. The off switch exists only for
-    plan-shape tests.
+    Construction is NOT lazy with ``truncate_lineage=True``: the early
+    termination check runs one eager ``.first()`` job before the loop
+    and one per iteration, so building the DataFrame already executes
+    the pair pipeline and the label iterations (the input must exist at
+    construction time, and construct-vs-execute timings split
+    accordingly). Intermediates live only for this DataFrame's
+    lifetime — nothing is reused across separate invocations. The off
+    switch (lazy, no early termination) exists only for plan-shape
+    tests.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.union(

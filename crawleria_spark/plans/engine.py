@@ -6,7 +6,7 @@ independent record-at-a-time twin; pytest asserts equality of per-host
 fetch order, the URL-seen set, and per-row span sequences):
 
     frontier dequeue
-      → dedup (left_anti vs seen, optional bloom pre-filter; then
+      → dedup (left_anti vs seen, optional cuckoo pre-filter; then
         min-priority per url_canon)
       → robots gate (broadcast join, longest-prefix rule)
       → per-host concurrency cap  → global page budget
@@ -33,8 +33,8 @@ Scale design (10^10-URL frontier on 1000 executors):
   10^10-row frontier scans ~0.1-1%, not all of it.
 - the dedup anti-join is the only frontier-scale shuffle per round
   (head-scale when the budget binds), and AQE (skew-join on) re-plans
-  it at runtime. A bloom pre-filter (operators/bloom.py) drops the
-  95%+ already-seen candidates map-side before the exact join.
+  it at runtime. A cuckoo-filter pre-filter (operators/cuckoo.py) drops
+  the 95%+ already-seen candidates map-side before the exact join.
 - no single-partition global windows anywhere: global ordinals and the
   budget cut use deterministic priority-bucketed two-pass ranking
   (operators/ordinal bucketed_* — pure-expression pid, recompute-safe,
@@ -60,7 +60,12 @@ from pyspark.sql import types as T
 
 from crawleria_spark.config import CrawlConfig
 from crawleria_spark.functions.urls import host_expr, url_canon_expr
-from crawleria_spark.operators.bloom import FILTER_EPOCH
+from crawleria_spark.operators.cuckoo import (
+    FILTER_EPOCH,
+    anti_join_seen_cuckoo,
+    build_cuckoo,
+    compact_cuckoo,
+)
 from crawleria_spark.operators.ordinal import bucketed_dense_ordinal, bucketed_limit_by
 from crawleria_spark.plans.catalog import Catalog
 from crawleria_spark.sources.fetch import SPAN_SCHEMA, fetch_stage
@@ -114,6 +119,9 @@ HOST_SEQ_SCHEMA = T.StructType(
     ]
 )
 
+# the AMQ seen filter append table (operators/cuckoo.py)
+FILTER_TABLE = "seen_cuckoo"
+
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("round", T.IntegerType()),
@@ -144,6 +152,7 @@ class CrawlEngine:
         fetcher,
         robots_rows: list[dict] | None = None,
         skew_safe: bool = False,
+        # use_bloom=True switches the (cuckoo) seen filter on
         use_bloom: bool = False,
         simulate_wallclock: bool = False,
         collect_stats: bool = True,
@@ -170,7 +179,6 @@ class CrawlEngine:
         self.pipeline_commits = pipeline_commits
         self._pending: dict | None = None  # in-flight round commit
         self._commit_pool = None
-        self._kind_warned = False
         self.robots = (
             spark.createDataFrame(
                 [
@@ -198,41 +206,11 @@ class CrawlEngine:
     def _empty(self, schema: T.StructType) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
-    def _effective_seen_kind(self) -> str:
-        """The AMQ kind this catalog actually holds. The kind is CATALOG
-        state, not per-invocation state: init() persists it in manifest
-        meta, and every later operation (resume / forget / refresh) uses
-        the persisted kind — a `--seen-filter` flag that disagrees with
-        the catalog would otherwise silently skip filter maintenance
-        (catalog.exists('seen_bloom') false under a cuckoo catalog) and
-        drift the filter from the seen table. Pre-meta catalogs are
-        auto-detected from which filter table exists; a disagreeing
-        config warns once and defers to the catalog."""
-        meta = self.catalog.latest_meta() if self.catalog.latest_version() is not None else {}
-        kind = meta.get("seen_filter")
-        if kind is None:  # legacy catalog (or fresh root): detect / config
-            if self.catalog.latest_version() is not None:
-                if self.catalog.exists("seen_cuckoo"):
-                    kind = "cuckoo"
-                elif self.catalog.exists("seen_bloom"):
-                    kind = "bloom"
-            if kind is None:
-                kind = self.config.seen_filter
-        if kind != self.config.seen_filter and not self._kind_warned:
-            self._kind_warned = True
-            print(
-                f"[crawleria] seen_filter={self.config.seen_filter!r} requested "
-                f"but catalog at {self.catalog.root} holds {kind!r} state — "
-                f"using the catalog's kind (re-init to switch kinds)",
-                flush=True,
-            )
-        return kind
-
     def _carry_meta(self, **updates) -> dict:
         """Next-commit meta = latest meta + updates. Round commits MUST
         go through this: meta is replaced wholesale per commit, so a
         bare dict would silently drop persisted catalog state
-        (seen_filter kind, amq_epoch, future keys)."""
+        (amq_epoch, frontier_gross, future keys)."""
         meta = self._latest_meta()
         meta.update(updates)
         return meta
@@ -305,36 +283,13 @@ class CrawlEngine:
         for df in p["persists"]:
             df.unpersist()
 
-    def _seen_filter_ops(self):
-        """(table, build_fn, anti_join_fn, compact_fn) for the catalog's
-        AMQ seen-filter kind — the north rule's "bloom/cuckoo-filter
-        URL-seen set". Both kinds share the delta-append architecture
-        (O(delta) row appended per round, executor-side merge at probe,
-        bounded driver collect) and the zero-false-negative anti-join
-        contract, so the round pipeline is kind-agnostic."""
-        cfg = self.config
-        if self._effective_seen_kind() == "cuckoo":
-            from crawleria_spark.operators import cuckoo as cf
-
-            def build(df: DataFrame) -> DataFrame:
-                return cf.build_cuckoo(
-                    df,
-                    n_buckets=cfg.frontier_partitions,
-                    capacity_per_bucket=cfg.bloom_capacity_per_partition,
-                )
-
-            return "seen_cuckoo", build, cf.anti_join_seen_cuckoo, cf.compact_cuckoo
-        from crawleria_spark.operators import bloom as bl
-
-        def build(df: DataFrame) -> DataFrame:
-            return bl.build_bloom(
-                df,
-                n_buckets=cfg.frontier_partitions,
-                capacity_per_bucket=cfg.bloom_capacity_per_partition,
-                fpp=cfg.bloom_fpp,
-            )
-
-        return "seen_bloom", build, bl.anti_join_seen, bl.compact_blooms
+    def _build_filter(self, hashes: DataFrame) -> DataFrame:
+        """Cuckoo seen filter rows over a ``url_hash`` column."""
+        return build_cuckoo(
+            hashes,
+            n_buckets=self.config.frontier_partitions,
+            capacity_per_bucket=self.config.filter_capacity_per_partition,
+        )
 
     def init(self, seeds: list[str]) -> None:
         """Round -1 commit: seed frontier + empty state tables.
@@ -369,7 +324,8 @@ class CrawlEngine:
         # them under REPLACE: a fresh crawl into a reused catalog root must
         # not inherit the previous run's seen set / documents / fetch_log
         # (it would silently dedup against them and mix stale rows into
-        # results). Stale seen_bloom is dropped for the same reason.
+        # results). A stale seen filter is dropped for the same reason
+        # (seen_bloom: the table of an earlier bloom-filter engine).
         self.catalog.commit(
             replace={
                 "frontier": frontier,
@@ -379,17 +335,14 @@ class CrawlEngine:
                 "fetch_log": self._empty(FETCH_LOG_SCHEMA),
                 "metrics": self._empty(METRICS_SCHEMA),
             },
-            drop=["seen_bloom", "seen_cuckoo"],
+            drop=["seen_bloom", FILTER_TABLE],
             meta={
                 "round": -1,
                 "next_priority": next_priority,
                 "fetched_total": 0,
                 # catalog state, carried forward by every later commit:
-                # the AMQ kind this catalog holds (resume/forget/refresh
-                # use it over any per-invocation flag) and the filter
-                # hashing-scheme epoch (stale blobs are undetectable at
-                # probe time — see bloom.FILTER_EPOCH)
-                "seen_filter": cfg.seen_filter,
+                # the filter hashing-scheme epoch (stale blobs are
+                # undetectable at probe time — see cuckoo.FILTER_EPOCH)
                 "amq_epoch": FILTER_EPOCH,
                 # gross physical frontier row count, maintained
                 # arithmetically every commit that touches the table —
@@ -417,25 +370,24 @@ class CrawlEngine:
         )
         return df.filter(cond)
 
-    def _read_filter_checked(self):
-        """(filter_table, anti_join_fn, filter_df | None) for this round's
-        dedup. Before probing, the catalog's ``amq_epoch`` is checked
-        against the current hashing scheme (bloom.FILTER_EPOCH): blobs
-        are raw bit/slot arrays with no version header, so probing an
+    def _read_filter_checked(self) -> DataFrame | None:
+        """The seen filter rows for this round's dedup (None = exact
+        anti-join only). Before probing, the catalog's ``amq_epoch`` is
+        checked against the current hashing scheme (cuckoo.FILTER_EPOCH):
+        blobs are raw slot arrays with no version header, so probing an
         old-epoch filter with new-epoch indexes yields FALSE NEGATIVES —
         already-seen URLs would re-fetch with duplicate seen/documents
         rows, undetectably. A stale (or missing, i.e. pre-epoch) stamp
         triggers a one-time distributed rebuild of the filter from the
         exact seen table, committed with the fresh stamp."""
-        filter_table, build_filter, anti_join, _ = self._seen_filter_ops()
         has_delta = (
-            self._pending is not None and filter_table in self._pending["append"]
+            self._pending is not None and FILTER_TABLE in self._pending["append"]
         )
-        if not (self.use_bloom and (self.catalog.exists(filter_table) or has_delta)):
-            return filter_table, anti_join, None
+        if not (self.use_bloom and (self.catalog.exists(FILTER_TABLE) or has_delta)):
+            return None
         if self._latest_meta().get("amq_epoch") != FILTER_EPOCH:
             print(
-                f"[crawleria] {filter_table} was written under filter epoch "
+                f"[crawleria] {FILTER_TABLE} was written under filter epoch "
                 f"{self._latest_meta().get('amq_epoch', 1)!r} != current "
                 f"{FILTER_EPOCH} — rebuilding from the exact seen table",
                 flush=True,
@@ -443,13 +395,13 @@ class CrawlEngine:
             self.flush()  # the rebuild is its own commit
             self.catalog.commit(
                 replace={
-                    filter_table: build_filter(
+                    FILTER_TABLE: self._build_filter(
                         self.catalog.read("seen").select("url_hash")
                     )
                 },
                 meta=self._carry_meta(amq_epoch=FILTER_EPOCH),
             )
-        return filter_table, anti_join, self._read_state(filter_table)
+        return self._read_state(FILTER_TABLE)
 
     def run_round(self, async_commit: bool = False) -> dict:
         """Execute one crawl round against the latest logical snapshot.
@@ -494,7 +446,7 @@ class CrawlEngine:
 
         from crawleria_spark.operators.politeness import bucketed_host_rank, per_host_rank
 
-        filter_table, anti_join_seen, bloom_df = self._read_filter_checked()
+        filter_df = self._read_filter_checked()
         round_persists: list = []  # intermediates to release post-commit
         remaining = cfg.max_pages - fetched_total
         if remaining <= 0:
@@ -506,20 +458,18 @@ class CrawlEngine:
             persisted handles so a rejected head attempt can release
             them immediately."""
             persists: list = []
-            # 2. dedup: anti-join vs seen (+ optional bloom pre-filter),
+            # 2. dedup: anti-join vs seen (+ optional cuckoo pre-filter),
             # then min-(priority, depth, url) per url_canon as a HASH
             # AGGREGATE with map-side partial combine (min_by over a
             # struct key) — far cheaper than a sort-window when dup
             # ratios are high, and the shuffle key matches the
             # anti-join's, so Catalyst reuses the exchange. Priorities
             # are globally unique ordinals ⇒ no ties ⇒ deterministic.
-            alive = anti_join_seen(
+            alive = anti_join_seen_cuckoo(
                 head,
                 seen,
-                bloom_df,
+                filter_df,
                 n_buckets=cfg.frontier_partitions,
-                capacity_per_bucket=cfg.bloom_capacity_per_partition,
-                fpp=cfg.bloom_fpp,
                 registry=persists,
             ).persist()
             persists.append(alive)
@@ -775,7 +725,7 @@ class CrawlEngine:
             )
         ).persist()
         # Narrow twin of the round batch: every derived output that does
-        # NOT need spans/links (fetch_log, seen, host_seq, bloom, lineage
+        # NOT need spans/links (fetch_log, seen, host_seq, filter, lineage
         # metrics) scans THIS ~50-byte/row cache instead of the wide
         # spans+links cache. With multi-executor deployments the commit's
         # concurrent write jobs otherwise each re-scan the wide cache
@@ -875,8 +825,8 @@ class CrawlEngine:
         # Deferred (cap/budget) rows are not in `seen`, so they stay
         # live in their original append dirs untouched. At a 10^10-URL
         # frontier the per-round difference is appending ~10^7 rows vs
-        # rewriting 10^10; the bloom prefilter keeps the accumulated
-        # dead rows cheap at dequeue (they are seen ⇒ bloom-positive ⇒
+        # rewriting 10^10; the seen filter keeps the accumulated
+        # dead rows cheap at dequeue (they are seen ⇒ filter-positive ⇒
         # confirmed dead map-side + one suspects join), and crawl()
         # compacts the frontier to its live set when delta dirs pile up.
 
@@ -930,17 +880,16 @@ class CrawlEngine:
             "metrics": metrics_df,
         }
         if self.use_bloom:
-            # APPEND the round-delta filter only, sized for the delta —
-            # both AMQ kinds merge the accumulated rows per bucket
-            # EXECUTOR-side at probe time, collecting only the merged
+            # APPEND the round-delta filter only, stored sparse while
+            # small — the probe merges the accumulated rows per bucket
+            # EXECUTOR-side, collecting only the merged
             # rows (driver traffic independent of round count). The
             # previous merge-and-REWRITE of the cumulative filter cost
             # 8-23 s per round on the 2M-URL bench; this is O(delta)
             # like every other append. crawl() compacts when
             # directories pile up.
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
             filter_src = seen_new.select("url_hash")
-            if bloom_df is None:
+            if filter_df is None:
                 # FIRST filter write of this catalog: it must cover the
                 # ENTIRE seen set, not just this round's delta. A
                 # catalog bootstrapped with pre-seeded seen rows (no
@@ -948,9 +897,11 @@ class CrawlEngine:
                 # certainly-new from the next round on — false
                 # negatives, silent duplicate re-fetches. One-time
                 # O(seen) cost; engine-inited catalogs have empty
-                # pre-round seen here so the union is free.
+                # pre-round seen here so the union is free. This is
+                # also how a catalog left by the earlier bloom-filter
+                # engine (a seen_bloom table, no seen_cuckoo) migrates.
                 filter_src = seen.select("url_hash").unionByName(filter_src)
-            append_tables[filter_table] = build_filter(filter_src)
+            append_tables[FILTER_TABLE] = self._build_filter(filter_src)
         if n_cand > 0:
             append_tables["frontier"] = new_rows
         new_meta = self._carry_meta(
@@ -959,7 +910,7 @@ class CrawlEngine:
             fetched_total=fetched_total,
             frontier_gross=pending_bound + n_cand,
         )
-        if filter_table in append_tables:
+        if FILTER_TABLE in append_tables:
             # the delta appended this round is current-epoch, and any
             # pre-existing filter rows were epoch-verified (rebuilt if
             # stale) by _read_filter_checked at round start — so the
@@ -986,7 +937,7 @@ class CrawlEngine:
             # failure unit.)
             overlay = {
                 t: append_tables[t].localCheckpoint(eager=False)
-                for t in ("frontier", "seen", "host_seq", filter_table)
+                for t in ("frontier", "seen", "host_seq", FILTER_TABLE)
                 if t in append_tables
             }
             base_version = self.catalog.latest_version()
@@ -1033,15 +984,11 @@ class CrawlEngine:
         scheduling). Returns how many of the URLs were actually seen.
 
         Admin op, not a round: one atomic commit that (a) REPLACEs the
-        exact ``seen`` table minus the targets, (b) updates the AMQ
-        filter — this is where ``config.seen_filter`` matters: the
-        CUCKOO kind DELETES the targets' fingerprints in O(filter
-        bytes) (operators/cuckoo.delete_hashes), while the bloom kind
-        must REBUILD from the full remaining seen set because blooms
-        cannot delete — a forget-heavy deployment should therefore run
-        with ``seen_filter="cuckoo"``; under the default bloom every
-        forget relaunches an O(total-seen) distributed rebuild — and
-        (c) with ``requeue=True`` APPENDs the
+        exact ``seen`` table minus the targets, (b) DELETES the targets'
+        fingerprints from the cuckoo seen filter in O(filter bytes)
+        (operators/cuckoo.delete_hashes) — or, for a wave above
+        FORGET_DELETE_MAX keys or a stale-epoch filter, rebuilds it from
+        the surviving seen rows — and (c) with ``requeue=True`` APPENDs the
         forgotten URLs back onto the frontier as depth-0 rows with
         fresh priorities (else they are only re-fetched if
         re-discovered). Existing documents/fetch_log rows are kept —
@@ -1076,34 +1023,26 @@ class CrawlEngine:
         present = {r["url_canon"]: int(r["url_hash"]) for r in present_rows}
         new_seen = seen.join(targets, "url_canon", "left_anti")
         replace: dict[str, DataFrame] = {"seen": new_seen}
-        if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            if self.catalog.exists(filter_table):
-                if (
-                    self._effective_seen_kind() == "cuckoo"
-                    and len(present) <= self.FORGET_DELETE_MAX
-                    # stale-epoch blobs probe wrong — deletion would
-                    # corrupt silently; rebuild re-stamps instead
-                    and self.catalog.latest_meta().get("amq_epoch")
-                    == FILTER_EPOCH
-                ):
-                    from crawleria_spark.operators.cuckoo import delete_hashes
-
-                    replace[filter_table] = delete_hashes(
-                        self.catalog.read(filter_table),
-                        list(present.values()),
-                        n_buckets=self.config.frontier_partitions,
-                    )
-                else:
-                    # bloom kind (no deletion), or a forget wave too big
-                    # for delete_hashes's per-key driver loop
-                    # (> FORGET_DELETE_MAX keys): distributed rebuild
-                    # from the surviving seen rows, refresh()-style
-                    replace[filter_table] = build_filter(
-                        new_seen.select("url_hash")
-                    )
         meta = dict(self.catalog.latest_meta())
-        if any(t in replace for t in ("seen_bloom", "seen_cuckoo")):
+        if self.use_bloom and self.catalog.exists(FILTER_TABLE):
+            if (
+                len(present) <= self.FORGET_DELETE_MAX
+                # stale-epoch blobs probe wrong — deletion would
+                # corrupt silently; rebuild re-stamps instead
+                and meta.get("amq_epoch") == FILTER_EPOCH
+            ):
+                from crawleria_spark.operators.cuckoo import delete_hashes
+
+                replace[FILTER_TABLE] = delete_hashes(
+                    self.catalog.read(FILTER_TABLE),
+                    list(present.values()),
+                    n_buckets=self.config.frontier_partitions,
+                )
+            else:
+                # a wave too big for delete_hashes's per-key driver loop
+                # (or stale-epoch blobs): distributed rebuild from the
+                # surviving seen rows, refresh()-style
+                replace[FILTER_TABLE] = self._build_filter(new_seen.select("url_hash"))
             meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
         append: dict[str, DataFrame] = {}
         if requeue:
@@ -1149,8 +1088,8 @@ class CrawlEngine:
         the surviving seen rows in one distributed pass rather than
         deleting expired fingerprints one by one: a wave deletes a
         large fraction of all keys, where rebuild is O(survivors) and
-        yields a fresh compact filter (both kinds; cuckoo's O(filter)
-        delete remains the right tool for the bounded forget() path).
+        yields a fresh compact filter (the O(filter) delete remains the
+        right tool for the bounded forget() path).
         Re-enqueue priorities come from the recompute-safe bucketed
         ordinal — no single-partition window, no sampling job. One
         atomic commit; resumable like any round boundary."""
@@ -1168,11 +1107,9 @@ class CrawlEngine:
         if n_expired == 0:
             return {"round": rnd, "expired": 0, "requeued": 0}
         replace: dict[str, DataFrame] = {"seen": kept}
-        if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            if self.catalog.exists(filter_table):
-                replace[filter_table] = build_filter(kept.select("url_hash"))
-                meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
+        if self.use_bloom and self.catalog.exists(FILTER_TABLE):
+            replace[FILTER_TABLE] = self._build_filter(kept.select("url_hash"))
+            meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
         append: dict[str, DataFrame] = {}
         n_requeued = 0
         if requeue:
@@ -1274,9 +1211,8 @@ class CrawlEngine:
             ),
         }
         if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
             filter_src = fetched.select("url_hash")
-            if not self.catalog.exists(filter_table):
+            if not self.catalog.exists(FILTER_TABLE):
                 # first filter write must cover the whole seen set (same
                 # bootstrapped-catalog false-negative hazard as
                 # run_round's first filter append)
@@ -1284,7 +1220,7 @@ class CrawlEngine:
                     self.catalog.read("seen").select("url_hash")
                     .unionByName(filter_src)
                 )
-            append_tables[filter_table] = build_filter(filter_src)
+            append_tables[FILTER_TABLE] = self._build_filter(filter_src)
         self.catalog.commit(
             append=append_tables,
             meta=self._carry_meta(
@@ -1389,12 +1325,11 @@ class CrawlEngine:
                 )
             # the filter append-table also merges rows per bucket when
             # compacted, so probe-time merge cost stays bounded too
-            filter_table, _, _, compact_filter = self._seen_filter_ops()
-            if self.use_bloom and self._n_dirs_logical(filter_table) > self.config.compact_dirs_threshold:
+            if self.use_bloom and self._n_dirs_logical(FILTER_TABLE) > self.config.compact_dirs_threshold:
                 self.flush()
                 self.catalog.commit(
                     replace={
-                        filter_table: compact_filter(self.catalog.read(filter_table))
+                        FILTER_TABLE: compact_cuckoo(self.catalog.read(FILTER_TABLE))
                     },
                     meta=self.catalog.latest_meta(),
                 )

@@ -115,13 +115,15 @@ class IcebergCatalog(Catalog):
         """The table's CURRENT snapshot id.
 
         Primary path: the Iceberg Java API's ``currentSnapshot()`` — the
-        authoritative pointer. The previous implementation sorted the
-        ``.snapshots`` metadata table by ``committed_at DESC,
-        snapshot_id DESC``; snapshot ids are random (not monotonic), so
-        a same-millisecond tie could pin the WRONG snapshot, and any
-        concurrent external writer between our write and the SELECT
-        would be pinned instead of ours (r6 ADVICE). The sort remains
-        only as a fallback when the Java helper is unavailable."""
+        authoritative pointer. It removes the ordering ambiguity of
+        sorting the ``.snapshots`` metadata table by ``committed_at
+        DESC, snapshot_id DESC`` (snapshot ids are random, not
+        monotonic, so a same-millisecond tie could pin the WRONG
+        snapshot). It does NOT close the read-after-write race: the
+        pointer is read after append()/createOrReplace() returns, so a
+        concurrent external writer committing in that window is still
+        pinned as this commit's snapshot. The sort remains only as a
+        fallback when the Java helper is unavailable."""
         try:
             jtable = self.spark._jvm.org.apache.iceberg.spark.Spark3Util.loadIcebergTable(  # type: ignore[union-attr]
                 self.spark._jsparkSession, self._ident(table)

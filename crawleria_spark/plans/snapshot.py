@@ -98,7 +98,7 @@ class SnapshotCatalog(Catalog):
 
         ``drop`` removes tables from the new manifest (their data dirs stay
         on disk until ``gc``) — used by CrawlEngine.init to clear stale
-        state (e.g. seen_bloom) when starting a fresh crawl in a reused
+        state (e.g. seen_cuckoo) when starting a fresh crawl in a reused
         catalog root."""
         prev = self.latest_manifest()
         version = (prev["version"] + 1) if prev else 0

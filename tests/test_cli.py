@@ -54,19 +54,18 @@ def test_cli_resume(spark, tmp_path, capsys):
 
 def test_cli_forget_recrawl(spark, tmp_path, capsys):
     """crawl → forget → resumed crawl re-fetches the forgotten URL
-    (cuckoo filter: fingerprint deletion, no bloom rebuild)."""
+    (cuckoo filter: fingerprint deletion, no filter rebuild)."""
     cat = str(tmp_path / "cli_forget")
     seed = "https://hub.example.com/p/0"
     main(["--catalog", cat, "crawl", seed, "--depth", "1",
-          "--max-pages", "12", "--max-rounds", "5", "--seen-filter", "cuckoo"])
+          "--max-pages", "12", "--max-rounds", "5"])
     first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    rc = main(["--catalog", cat, "forget", seed, "--seen-filter", "cuckoo"])
+    rc = main(["--catalog", cat, "forget", seed])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["forgotten"] == 1 and out["requeued"] == 1
     main(["--catalog", cat, "crawl", seed, "--depth", "1",
-          "--max-pages", "30", "--max-rounds", "3", "--resume",
-          "--seen-filter", "cuckoo"])
+          "--max-pages", "30", "--max-rounds", "3", "--resume"])
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert second["fetched"] > first["fetched"]  # the re-fetch happened
 

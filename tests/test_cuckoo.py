@@ -1,8 +1,10 @@
 """Cuckoo seen-set properties: zero false negatives (incl. under
-overload via the stash), bounded FP rate, O(delta) sparse appends,
-anti-join equivalence, merge losslessness, deletion semantics, full
-engine parity with seen_filter="cuckoo", and the forget() re-crawl
-path the cuckoo deletion enables."""
+overload via the stash), bounded FP rate (incl. for bucket-correlated
+keys), O(delta) sparse appends, anti-join equivalence, merge
+losslessness, deletion semantics, full engine parity with the seen
+filter on, and the forget() re-crawl path the cuckoo deletion enables.
+The engine tests also start from a catalog in the layout the earlier
+bloom-filter engine left (``legacy_bloom_layout``)."""
 
 import dataclasses
 
@@ -34,6 +36,42 @@ def _table_for(keys: np.ndarray, m: int):
     return _encode(m, table, stash_b, stash_f)
 
 
+def legacy_bloom_layout(catalog, n_partitions: int) -> dict:
+    """Rewrite a catalog's filter state into the layout the earlier
+    bloom-filter engine left: a bloom kind key in meta, a seen_bloom
+    table (partition int, bloom binary, n_items long; one zero-bit
+    1024-key-class row per partition) and no seen_cuckoo. Returns the
+    meta keys it added."""
+    bloom_rows = (
+        catalog.read("seen")
+        .groupBy(
+            F.pmod("url_hash", F.lit(n_partitions)).cast("int").alias("partition")
+        )
+        .agg(F.count("*").alias("n_items"))
+        .select("partition", F.unhex(F.lit("00" * 1232)).alias("bloom"), "n_items")
+    )
+    legacy_meta = {"seen_filter": "bloom"}
+    catalog.commit(
+        replace={"seen_bloom": bloom_rows},
+        drop=["seen_cuckoo"],
+        meta={**catalog.latest_meta(), **legacy_meta},
+    )
+    assert not catalog.exists("seen_cuckoo")
+    return legacy_meta
+
+
+def _engine(spark, catalog, cfg):
+    from crawleria_spark.plans.engine import CrawlEngine
+    from crawleria_spark.sources.fetch import synthetic_fetcher
+    from crawleria_spark.synthetic.world import robots_rules
+    from tests.test_oracle_parity import WORLD
+
+    return CrawlEngine(
+        spark, catalog, cfg, synthetic_fetcher(WORLD),
+        robots_rows=robots_rules(WORLD), use_bloom=True,
+    )
+
+
 def test_cuckoo_numpy_no_false_negatives():
     m = cuckoo_m_buckets(10_000)
     rng = np.random.default_rng(0)
@@ -45,6 +83,24 @@ def test_cuckoo_numpy_no_false_negatives():
     probes = np.setdiff1d(probes, keys)
     fp_rate = _probe(blob, probes).mean()
     assert fp_rate < 0.005  # design rate ≈ 8/2^16 ≈ 1.2e-4
+
+
+def test_cuckoo_fpp_holds_for_bucket_correlated_keys():
+    """Regression: one partition's filter holds keys sharing h ≡ b (mod
+    n_buckets). Without the _mix64 decorrelation their low bits are
+    constant, so ``h & (m-1)`` packs every key into 1/n_buckets of the
+    table — evictions, a large stash and an inflated probe FP rate."""
+    n_buckets, bucket = 32, 5
+    m = cuckoo_m_buckets(65536)
+    rng = np.random.default_rng(3)
+    # one partition's worth of keys: all ≡ bucket (mod n_buckets)
+    keys = np.unique(rng.integers(0, 2**57, size=62_500, dtype=np.int64) * n_buckets + bucket)
+    blob = _table_for(keys, m)
+    assert _probe(blob, keys).all()  # zero FN
+    probes = rng.integers(0, 2**57, size=100_000, dtype=np.int64) * n_buckets + bucket
+    probes = np.setdiff1d(probes, keys)
+    fp_rate = _probe(blob, probes).mean()
+    assert fp_rate < 1e-3, f"bucket-correlated FP rate {fp_rate:.5f}"
 
 
 def test_cuckoo_stash_keeps_zero_fn_under_overload():
@@ -147,14 +203,13 @@ def test_delete_hashes_unsees_keys(spark):
 
 
 def test_engine_parity_with_cuckoo(spark, tmp_catalog_root):
-    """Full oracle parity with the cuckoo seen-filter on — the filter
-    kind must not change ANY output (north-rule invariant)."""
+    """Full oracle parity with the cuckoo seen filter on — the filter
+    must not change ANY output (north-rule invariant)."""
     from crawleria_spark.oracle.crawler import OracleCrawler
     from tests.test_oracle_parity import CONFIG, SEEDS, WORLD, assert_parity, run_engine
 
-    cfg = dataclasses.replace(CONFIG, seen_filter="cuckoo")
     oracle = OracleCrawler(CONFIG, WORLD).crawl(SEEDS)
-    catalog = run_engine(spark, tmp_catalog_root, config=cfg, use_bloom=True)
+    catalog = run_engine(spark, tmp_catalog_root, config=CONFIG, use_bloom=True)
     assert_parity(catalog, oracle)
     assert catalog.exists("seen_cuckoo")
     assert not catalog.exists("seen_bloom")
@@ -162,27 +217,38 @@ def test_engine_parity_with_cuckoo(spark, tmp_catalog_root):
     assert n_items == catalog.read("seen").count()
 
 
-@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_engine_compacts_filter_table(spark, tmp_catalog_root, kind):
+@pytest.mark.parametrize("origin", ["cuckoo", "bloom"])
+def test_engine_compacts_filter_table(spark, tmp_catalog_root, origin):
     """crawl() merges the filter append-table to one row per partition
-    once its delta-directory count passes compact_dirs_threshold —
-    dispatched per filter kind, membership preserved (parity asserted
-    by the crawl itself completing with correct dedup)."""
+    once its delta-directory count passes compact_dirs_threshold,
+    membership preserved (parity asserted by the crawl itself
+    completing with correct dedup). origin="bloom" resumes after two
+    rounds from the legacy bloom layout, so the filter the compactions
+    merge starts as the whole-seen build of the first resumed round."""
     from crawleria_spark.oracle.crawler import OracleCrawler
+    from crawleria_spark.plans.snapshot import SnapshotCatalog
     from tests.test_oracle_parity import CONFIG, SEEDS, WORLD, assert_parity, run_engine
 
-    cfg = dataclasses.replace(CONFIG, seen_filter=kind, compact_dirs_threshold=2)
+    cfg = dataclasses.replace(CONFIG, compact_dirs_threshold=2)
     oracle = OracleCrawler(CONFIG, WORLD).crawl(SEEDS)
-    catalog = run_engine(spark, tmp_catalog_root, config=cfg, use_bloom=True)
+    if origin == "cuckoo":
+        catalog = run_engine(spark, tmp_catalog_root, config=cfg, use_bloom=True)
+    else:
+        catalog = SnapshotCatalog(spark, tmp_catalog_root)
+        engine = _engine(spark, catalog, cfg)
+        engine.init(SEEDS)
+        engine.run_round()
+        engine.run_round()
+        legacy_bloom_layout(catalog, cfg.frontier_partitions)
+        _engine(spark, catalog, cfg).crawl(seeds=None)
     assert_parity(catalog, oracle)  # compaction changed no output
-    table = "seen_cuckoo" if kind == "cuckoo" else "seen_bloom"
+    table = "seen_cuckoo"
     # the threshold (2) is far below the rounds run → compaction fired
     assert catalog.n_dirs(table) <= 3
     n_parts = catalog.read(table).select("partition").distinct().count()
     n_rows = catalog.read(table).count()
-    if kind == "cuckoo":
-        # cuckoo compaction merges to exactly one row per partition
-        assert n_rows <= n_parts + cfg.frontier_partitions
+    # compaction merges to exactly one row per partition
+    assert n_rows <= n_parts + cfg.frontier_partitions
     assert (
         catalog.read(table).agg(F.sum("n_items")).collect()[0][0]
         == catalog.read("seen").count()
@@ -199,28 +265,25 @@ def test_engine_compacts_filter_table(spark, tmp_catalog_root, kind):
     )
 
 
-@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_forget_recrawls_urls(spark, tmp_catalog_root, kind):
+@pytest.mark.parametrize("origin", ["cuckoo", "bloom"])
+def test_forget_recrawls_urls(spark, tmp_catalog_root, origin):
     """forget() un-sees URLs and a resumed crawl re-fetches them — via
-    O(filter) fingerprint deletion for cuckoo, full rebuild for bloom."""
-    from tests.test_oracle_parity import CONFIG, SEEDS, WORLD, run_engine
+    O(filter) fingerprint deletion. origin="bloom" forgets on a catalog
+    in the legacy bloom layout: there is no filter to delete from, and
+    the resumed crawl builds seen_cuckoo from the surviving seen rows."""
+    from tests.test_oracle_parity import CONFIG, run_engine
 
-    cfg = dataclasses.replace(CONFIG, max_pages=10_000, seen_filter=kind)
+    cfg = dataclasses.replace(CONFIG, max_pages=10_000)
     catalog = run_engine(spark, tmp_catalog_root, config=cfg, use_bloom=True)
+    if origin == "bloom":
+        legacy_bloom_layout(catalog, cfg.frontier_partitions)
     fetch_log = catalog.read("fetch_log")
     max_round = fetch_log.agg(F.max("round")).collect()[0][0]
     victims = [
         r["url_canon"]
         for r in catalog.read("seen").orderBy("url_canon").limit(3).collect()
     ]
-    from crawleria_spark.plans.engine import CrawlEngine
-    from crawleria_spark.sources.fetch import synthetic_fetcher
-    from crawleria_spark.synthetic.world import robots_rules
-
-    engine = CrawlEngine(
-        spark, catalog, cfg, synthetic_fetcher(WORLD),
-        robots_rows=robots_rules(WORLD), use_bloom=True,
-    )
+    engine = _engine(spark, catalog, cfg)
     n = engine.forget(victims)
     assert n == 3
     assert engine.forget(["https://never-crawled.example/x"]) == 0
@@ -237,28 +300,25 @@ def test_forget_recrawls_urls(spark, tmp_catalog_root, kind):
     assert refetched == 3
     seen_final = {r["url_canon"] for r in catalog.read("seen").collect()}
     assert set(victims) <= seen_final
+    n_items = catalog.read("seen_cuckoo").agg(F.sum("n_items")).collect()[0][0]
+    assert n_items == len(seen_final)
 
 
 def test_large_forget_routes_through_rebuild(spark, tmp_catalog_root, monkeypatch):
     """A forget wave above FORGET_DELETE_MAX must NOT run delete_hashes's
-    per-key driver loop even under the cuckoo kind — it rebuilds the
+    per-key driver loop — it rebuilds the
     filter from the surviving seen rows in one distributed pass."""
     from crawleria_spark.operators import cuckoo as cuckoo_mod
     from crawleria_spark.plans.engine import CrawlEngine
-    from crawleria_spark.sources.fetch import synthetic_fetcher
-    from crawleria_spark.synthetic.world import robots_rules
-    from tests.test_oracle_parity import CONFIG, WORLD, run_engine
+    from tests.test_oracle_parity import CONFIG, run_engine
 
-    cfg = dataclasses.replace(CONFIG, max_pages=10_000, seen_filter="cuckoo")
+    cfg = dataclasses.replace(CONFIG, max_pages=10_000)
     catalog = run_engine(spark, tmp_catalog_root, config=cfg, use_bloom=True)
     victims = [
         r["url_canon"]
         for r in catalog.read("seen").orderBy("url_canon").limit(5).collect()
     ]
-    engine = CrawlEngine(
-        spark, catalog, cfg, synthetic_fetcher(WORLD),
-        robots_rows=robots_rules(WORLD), use_bloom=True,
-    )
+    engine = _engine(spark, catalog, cfg)
     monkeypatch.setattr(CrawlEngine, "FORGET_DELETE_MAX", 4)
 
     def boom(*a, **k):  # the per-key loop must not run beyond the cap

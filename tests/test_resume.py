@@ -84,7 +84,7 @@ def test_pipelined_crawl_equals_blocking(spark, tmp_path):
 
 def test_stale_filter_epoch_rebuilds(spark, tmp_path):
     """A catalog whose AMQ blobs predate the current hashing scheme
-    (meta amq_epoch != bloom.FILTER_EPOCH) must be detected at the next
+    (meta amq_epoch != cuckoo.FILTER_EPOCH) must be detected at the next
     probe and rebuilt from the exact seen table. The blobs carry no
     version header, so without the stamp the mismatch is undetectable:
     already-seen URLs probe certainly-new, bypass the exact anti-join,
@@ -92,7 +92,7 @@ def test_stale_filter_epoch_rebuilds(spark, tmp_path):
     replacing the filter with an EMPTY (probe-all-negative) table plus
     a stale stamp mid-crawl — the resumed run must still equal an
     uninterrupted one."""
-    from crawleria_spark.operators.bloom import BLOOM_SCHEMA, FILTER_EPOCH
+    from crawleria_spark.operators.cuckoo import CUCKOO_SCHEMA, FILTER_EPOCH
 
     def mk(root):
         cat = SnapshotCatalog(spark, root)
@@ -109,7 +109,7 @@ def test_stale_filter_epoch_rebuilds(spark, tmp_path):
     meta = dict(cat.latest_meta())
     meta["amq_epoch"] = 1  # pre-_mix64 catalog
     cat.commit(
-        replace={"seen_bloom": spark.createDataFrame([], BLOOM_SCHEMA)},
+        replace={"seen_cuckoo": spark.createDataFrame([], CUCKOO_SCHEMA)},
         meta=meta,
     )
     resumed, _ = mk(root_a)
@@ -122,45 +122,43 @@ def test_stale_filter_epoch_rebuilds(spark, tmp_path):
     assert _final_state(cat) == _final_state(cat_b)  # no duplicate rows
 
 
-def test_seen_filter_kind_is_catalog_state(spark, tmp_path):
-    """The AMQ kind is persisted at init and wins over a disagreeing
-    later invocation: resuming / forgetting a cuckoo catalog with a
-    default-bloom config must keep maintaining the CUCKOO filter
-    (ADVICE r3: the per-invocation flag silently skipped filter
-    bookkeeping when it disagreed with the catalog)."""
-    import dataclasses
-
+def test_legacy_bloom_catalog_resumes(spark, tmp_path):
+    """A catalog written by the earlier bloom-filter engine (a bloom kind
+    key in meta, a seen_bloom table, no seen_cuckoo) resumes with
+    no migration step: the first resumed round has no cuckoo filter to
+    probe, so it dedups by the exact anti-join and builds seen_cuckoo
+    from the whole seen table. The final state equals an uninterrupted
+    crawl's; the obsolete meta key is carried forward untouched."""
     from pyspark.sql import functions as F
 
-    root = str(tmp_path / "kind")
-    cat = SnapshotCatalog(spark, root)
-    cfg_cuckoo = dataclasses.replace(CONFIG, seen_filter="cuckoo", max_pages=12)
-    eng = CrawlEngine(
-        spark, cat, cfg_cuckoo, synthetic_fetcher(WORLD),
-        robots_rows=robots_rules(WORLD), use_bloom=True,
-    )
+    from tests.test_cuckoo import legacy_bloom_layout
+
+    def mk(root):
+        cat = SnapshotCatalog(spark, root)
+        return CrawlEngine(
+            spark, cat, CONFIG, synthetic_fetcher(WORLD),
+            robots_rows=robots_rules(WORLD), use_bloom=True,
+        ), cat
+
+    root_a = str(tmp_path / "legacy")
+    eng, cat = mk(root_a)
     eng.init(SEEDS)
     eng.run_round()
-    assert cat.latest_meta()["seen_filter"] == "cuckoo"
+    eng.run_round()
+    legacy_meta = legacy_bloom_layout(cat, CONFIG.frontier_partitions)
 
-    # resumed under the DEFAULT (bloom) config — catalog kind wins
-    eng2 = CrawlEngine(
-        spark, cat, CONFIG, synthetic_fetcher(WORLD),
-        robots_rows=robots_rules(WORLD), use_bloom=True,
-    )
-    eng2.crawl(seeds=None, max_rounds=10)
-    assert cat.exists("seen_cuckoo") and not cat.exists("seen_bloom")
-    assert cat.latest_meta()["seen_filter"] == "cuckoo"
-    n_items = cat.read("seen_cuckoo").agg(F.sum("n_items")).collect()[0][0]
-    assert n_items == cat.read("seen").count()  # bookkeeping never skipped
-
-    victims = [
-        r["url_canon"]
-        for r in cat.read("seen").orderBy("url_canon").limit(2).collect()
-    ]
-    assert eng2.forget(victims) == 2  # maintains the cuckoo filter too
+    resumed, _ = mk(root_a)
+    resumed.crawl(seeds=None, max_rounds=20)
     n_items = cat.read("seen_cuckoo").agg(F.sum("n_items")).collect()[0][0]
     assert n_items == cat.read("seen").count()
+
+    root_b = str(tmp_path / "legacy_full")
+    eng_b, cat_b = mk(root_b)
+    eng_b.crawl(SEEDS, max_rounds=20)
+    *state_a, meta_a = _final_state(cat)
+    *state_b, meta_b = _final_state(cat_b)
+    assert state_a == state_b  # no duplicate or missing rows
+    assert meta_a == {**meta_b, **legacy_meta}
 
 
 def test_round_commit_is_atomic(spark, tmp_path):
@@ -395,7 +393,7 @@ def test_refresh_ttl_recrawl(spark, tmp_path):
     seen_mid = {r["url_canon"] for r in catalog.read("seen").collect()}
     assert seen_mid == set(seen_before) - wave
     # filter tracks the surviving seen set exactly (rebuilt)
-    n_items = catalog.read("seen_bloom").agg(F.sum("n_items")).collect()[0][0]
+    n_items = catalog.read("seen_cuckoo").agg(F.sum("n_items")).collect()[0][0]
     assert n_items == len(seen_mid)
     # requeued rows: fresh dense priorities in (first_round, url_canon)
     # order, host re-derived, depth 0
